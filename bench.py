@@ -67,11 +67,10 @@ BENCH_QUERIES = [
     "anchor_stats_incremental", "url_alias_groups",
     "fingerprint", "corpus_clean_pipeline", "corpus_split_stats", "shard_by_tokens", "seeded_shuffle", "pack_sequences", "cosine_topk", "ann_ivf_topk", "ann_recall", "embed_neardup",
     "embed_neardup_ann", "embed_neardup_incremental",
-    "embed_neardup_incr_recall", "neardup_recall", "multimodal_meta",
-    "multimodal_audio_meta", "multimodal_video_meta",
+    "embed_neardup_incr_recall", "neardup_recall",
     # crawl_host_stats is battery-only: like crawl_bfs_trace it runs a FULL
     # crawl, which the bench measures once as crawl_bfs_full instead
-    "multimodal_frame_patches", "warc_roundtrip", "warc_revisit",
+    "warc_roundtrip", "warc_revisit",
     "wat_extract", "cdx_index",
     "redirect_resolve",
     "fatal_error_routing", "ngram_jaccard_lsh",

@@ -1,12 +1,13 @@
 """Direct unit tests for the Bloom sidecar and the deterministic global
 sequence operator."""
 
+import numpy as np
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-
-from webcrawl_spark.operators.bloom import SeenBloom
+# the module, not its names: pytest would collect a bare ``test_bits``
+from webcrawl_spark.operators import bloom as B
 from webcrawl_spark.operators.seq import assign_global_seq
 
 _key = st.from_regex(r"/[A-Za-z0-9._/-]{0,20}", fullmatch=True)
@@ -16,39 +17,38 @@ _host = st.from_regex(r"[a-z0-9.-]{1,15}", fullmatch=True)
 @settings(max_examples=50, deadline=None)
 @given(st.lists(st.tuples(_host, _key), min_size=0, max_size=50))
 def test_bloom_no_false_negatives(pairs):
-    bl = SeenBloom(8, 1 << 12)
+    bits = 1 << 15
+    arr = np.zeros(bits // 8, dtype=np.uint8)
     pdf = pd.DataFrame(pairs, columns=["host", "url_key"])
-    bl.add_frame(pdf)
-    if pairs:
-        hits = SeenBloom.contains_batch(
-            bl.snapshot(), pdf["host"], pdf["url_key"]
-        )
-        assert hits.all()
+    B.set_bits(arr, pdf["host"], pdf["url_key"], bits)
+    assert B.test_bits(arr, pdf["host"], pdf["url_key"], bits).all()
 
 
 def test_bloom_save_load_roundtrip(tmp_path):
-    bl = SeenBloom(4, 1 << 12)
-    pdf = pd.DataFrame({"host": ["a", "b"], "url_key": ["/1", "/2"]})
-    bl.add_frame(pdf)
-    p = str(tmp_path / "b.npz")
-    bl.save(p)
-    bl2 = SeenBloom.load(p)
-    assert (bl2.snapshot()["parts"][0] == bl.snapshot()["parts"][0])
-    assert SeenBloom.contains_batch(bl2.snapshot(), pdf["host"], pdf["url_key"]).all()
+    """A partition file written by the update stage reads back, through
+    the check stage's loader, bit-identical and holding every key."""
+    bits = 1 << 12
+    d = str(tmp_path)
+    pdf = pd.DataFrame({"host_hash": [3, 3], "host": ["a", "b"], "url_key": ["/1", "/2"]})
+    B.make_update_fn(None, d, bits)(pdf)
+    arr = B._load_part(d, 3)
+    expect = np.zeros(bits // 8, dtype=np.uint8)
+    B.set_bits(expect, pdf["host"], pdf["url_key"], bits)
+    assert (arr == expect).all()
+    assert B.test_bits(arr, pdf["host"], pdf["url_key"], bits).all()
+    assert B._load_part(d, 4) is None
 
 
 def test_bloom_fp_rate_reasonable():
-    bl = SeenBloom(8, 1 << 16)
+    bits = 1 << 19
+    arr = np.zeros(bits // 8, dtype=np.uint8)
     n = 2000
     pdf = pd.DataFrame(
         {"host": [f"h{i % 50}" for i in range(n)], "url_key": [f"/k{i}" for i in range(n)]}
     )
-    bl.add_frame(pdf)
-    novel = pd.DataFrame(
-        {"host": pdf["host"], "url_key": pdf["url_key"] + "x"}
-    )
-    fp = SeenBloom.contains_batch(bl.snapshot(), novel["host"], novel["url_key"]).mean()
-    assert fp < 0.05
+    B.set_bits(arr, pdf["host"], pdf["url_key"], bits)
+    novel = pdf["url_key"] + "x"
+    assert B.test_bits(arr, pdf["host"], novel, bits).mean() < 0.05
 
 
 def test_assign_global_seq_matches_sort_order(spark):

@@ -20,6 +20,7 @@ import os
 import signal
 import subprocess
 import sys
+import threading
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -70,6 +71,7 @@ cfg = SW.crawl_config(
     reliable_checkpoints=True,
 )
 state = tempfile.mkdtemp(prefix="fault_state_")
+print("STATE " + state, flush=True)
 try:
     c = SparkCrawler(spark, pages, SW.seed_urls(64, n_hosts), state, cfg)
     m = c.run()
@@ -111,29 +113,42 @@ def _kill_tree(pid):
 
 
 def _run_crawl(tag, kill_worker=None, kill_after_round=2):
-    """Run the crawl child; optionally kill a worker once round k is seen."""
+    """Run the crawl child; optionally kill a worker once the child's state
+    dir holds the manifest ``_manifests/round-{kill_after_round}.json``."""
     script = "/tmp/fault_child.py"
     with open(script, "w") as f:
         f.write(_CHILD)
-    env = dict(os.environ, FAULT_REPO=REPO, WC_ROUND_TIMING="1")
+    env = dict(os.environ, FAULT_REPO=REPO)
     p = subprocess.Popen(
         [sys.executable, "-u", script, SF_DIR, str(MULT), tag],
         cwd=REPO, env=env, stdout=subprocess.PIPE,
         stderr=subprocess.STDOUT, text=True,
     )
-    result, killed = None, False
-    marker = f"[r{kill_after_round}]"
-    for line in p.stdout:
-        line = line.rstrip()
-        if line.startswith("RESULT "):
-            result = json.loads(line[7:])
-        if kill_worker is not None and not killed and marker in line:
-            print(f"  >> round {kill_after_round} reached — SIGKILLing "
+    out = {"state": None, "result": None}
+
+    def read():
+        for line in p.stdout:
+            line = line.rstrip()
+            if line.startswith("STATE "):
+                out["state"] = line[6:]
+            elif line.startswith("RESULT "):
+                out["result"] = json.loads(line[7:])
+
+    reader = threading.Thread(target=read, daemon=True)
+    reader.start()
+    killed = False
+    while kill_worker is not None and not killed and p.poll() is None:
+        if out["state"] and os.path.exists(os.path.join(
+            out["state"], "_manifests", f"round-{kill_after_round}.json"
+        )):
+            print(f"  >> round {kill_after_round} committed — SIGKILLing "
                   f"worker {kill_worker.pid} and its executors", flush=True)
             _kill_tree(kill_worker.pid)
             killed = True
+        time.sleep(0.2)
     rc = p.wait(timeout=3600)
-    return result, rc, killed
+    reader.join()
+    return out["result"], rc, killed
 
 
 def main():

@@ -82,7 +82,6 @@ class CrawlConfig:
                                      # partition window (zero extra jobs);
                                      # above it, the range-partitioned
                                      # two-phase numbering in operators/seq.py
-    bloom_fpp: float = 0.01
     robots_enabled: bool = True
     rank_priority: bool = False      # weight discovered links by a ranks
                                      # table (url -> rank, e.g. link_pagerank):

@@ -81,10 +81,15 @@ def normalize_mime(mime: str) -> str:
     return mime.split(";", 1)[0].strip().lower()
 
 
+def _normalize_mime_batch(mimes: pd.Series) -> pd.Series:
+    """Vectorized :func:`normalize_mime`; NULL → ''."""
+    return mimes.fillna("").astype(str).str.split(";").str[0].str.strip().str.lower()
+
+
 def resource_types_of_mime_batch(mimes: pd.Series) -> pd.Series:
     """Vectorized :func:`resource_type_of_mime` over a (nullable)
     Content-Type Series — NULL/empty → unknown, unmapped → binary."""
-    base = mimes.fillna("").astype(str).str.split(";").str[0].str.strip().str.lower()
+    base = _normalize_mime_batch(mimes)
     rtype = base.map(_MIME_TO_TYPE)
     rtype = rtype.where(rtype.notna(), BINARY)
     return rtype.where(base != "", UNKNOWN)
@@ -132,3 +137,18 @@ def mime_of_type(rtype: str) -> str:
         JS: "text/javascript",
         VBS: "text/vbscript",
     }.get(rtype, "application/octet-stream")
+
+
+def effective_types(
+    paths: pd.Series, server_mimes: pd.Series, table: dict | None = None
+) -> tuple[pd.Series, pd.Series]:
+    """(rtype, mime) per row — the decode stage's effective-type decision:
+    the extension guess, unknown → html (no response headers; the corpus
+    is pages), then a server Content-Type that maps to a type wins
+    (GetMimeType prefers the response header, Crawler.cs:2100-2119)."""
+    rtype = guess_types_batch(paths, table)
+    rtype = rtype.where(rtype != UNKNOWN, HTML)
+    mime = rtype.map(mime_of_type)
+    srv = resource_types_of_mime_batch(server_mimes)
+    use = srv != UNKNOWN
+    return srv.where(use, rtype), _normalize_mime_batch(server_mimes).where(use, mime)

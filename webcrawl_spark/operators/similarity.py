@@ -3,17 +3,17 @@
 - brute-force cosine top-k: the exactness baseline — crossJoin + window.
   All arithmetic is JVM-side (``zip_with``/``aggregate`` fold, sequential
   and deterministic), cast to double before accumulating.
-- IVF-style bucketed top-k: a coarse quantizer (here: argmax component —
-  deterministic and engine-independent; swap for k-means centroid ids at
-  scale) prunes the candidate set to one bucket before ranking. At 100 TB
-  the bucket column is the shuffle/partition key and the per-bucket join
-  replaces the full crossJoin.
-- near-duplicate pairs: cosine threshold over candidate pairs.
+- IVF top-k: a deterministic integer k-means quantizer prunes each query's
+  candidates to its probed buckets before exact ranking.
+- near-duplicate pairs: exact cosine verification (:func:`cosine_verify`)
+  of candidate pairs from ``textdedup.candidate_pairs``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from .textdedup import candidate_pairs
 
 
 def as_double(col: str) -> str:
@@ -28,30 +28,42 @@ def norm_sql(a: str) -> str:
     return f"sqrt({dot_sql(a, a)})"
 
 
-def cosine_sql(a: str, b: str) -> str:
-    return f"({dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)}))"
-
-
-def _prep(emb: DataFrame, id_col: str, vec_col: str, out_id: str, out_vec: str) -> DataFrame:
-    return emb.select(
-        F.col(id_col).alias(out_id), F.expr(as_double(vec_col)).alias(out_vec)
-    )
-
-
 def _prep_normed(
     emb: DataFrame, id_col: str, vec_col: str,
     out_id: str, out_vec: str, out_norm: str,
 ) -> DataFrame:
-    """Like :func:`_prep` plus the vector's L2 norm computed ONCE per vector.
-
-    Pair-scoring then uses ``dot / (na * nb)`` — the exact same IEEE
-    operations (and therefore bit-identical results) as inlining
-    :func:`cosine_sql` per pair, at 1 fold per pair instead of 3."""
+    """(id, vector as doubles, L2 norm) — the norm computed ONCE per vector,
+    so pair scoring is ``dot / (na * nb)`` at 1 fold per pair instead of 3."""
     v = as_double(vec_col)
     return emb.select(
         F.col(id_col).alias(out_id),
         F.expr(v).alias(out_vec),
         F.expr(norm_sql(v)).alias(out_norm),
+    )
+
+
+def cosine_verify(
+    pairs: DataFrame, emb_a: DataFrame, emb_b: DataFrame | None = None,
+    id_col: str = "vec_id", vec_col: str = "embedding",
+    threshold: float = 0.3, round_to: int = 4,
+) -> DataFrame:
+    """(a, b, cos): the exact cosine verifier every near-duplicate family
+    shares — vectors (``a`` from ``emb_a``, ``b`` from ``emb_b``, default
+    the same table) attach to deduplicated id-only candidate pairs
+    (``textdedup.candidate_pairs``), so wide rows never enter the
+    candidate exchange and the per-pair fold runs once per pair; keeps
+    cosine strictly above ``threshold`` (the near-dup house convention)."""
+    va = _prep_normed(emb_a, id_col, vec_col, "a", "va", "na")
+    vb = _prep_normed(
+        emb_a if emb_b is None else emb_b, id_col, vec_col, "b", "vb", "nb"
+    )
+    return (
+        pairs.join(va, "a").join(vb, "b")
+        .withColumn(
+            "cos", F.expr(dot_sql("va", "vb")) / (F.col("na") * F.col("nb"))
+        )
+        .filter(F.col("cos") > threshold)
+        .select("a", "b", F.round("cos", round_to).alias("cos"))
     )
 
 
@@ -106,37 +118,6 @@ def brute_force_ranks(
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select("neighbor_id", F.col("rk").cast("long").alias("rk"))
-    )
-
-
-def argmax_bucket_sql(vec: str) -> str:
-    """Coarse quantizer: 1-based index of the max component (deterministic;
-    array_position returns the first match)."""
-    return f"array_position({vec}, array_max({vec}))"
-
-
-def ivf_topk(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    n_queries: int = 8, k: int = 5, round_to: int = 4,
-) -> DataFrame:
-    """Bucketed ANN: rank only within the query's coarse bucket."""
-    base = _prep(emb, id_col, vec_col, "id", "v").withColumn(
-        "bucket", F.expr(argmax_bucket_sql("v")).cast("int")
-    )
-    queries = base.filter(F.col("id") < n_queries).select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"), "bucket"
-    )
-    corpus = base.select(F.col("id").alias("neighbor_id"), F.col("v").alias("nv"), "bucket")
-    scored = (
-        queries.join(corpus, "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", F.expr(cosine_sql("qv", "nv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "bucket", F.round("cos", round_to).alias("cos"))
     )
 
 
@@ -487,76 +468,25 @@ def neardup_pairs_bucketed(
 
     The self-join key has only ``k_clusters`` distinct values, so without
     help its parallelism is capped at k_clusters tasks and a big bucket is
-    a straggler. The left side is therefore salted (``id % salt``) and the
-    right side replicated ``salt``x — the block-join trade: salt x more
-    rows shuffled on the replicated side buys salt x the parallelism for
-    the per-pair scoring, which dominates. Each pair still arises exactly
-    once (a given ``a`` carries one salt value). ``ranked`` accepts a
-    prefit quantizer (:func:`kmeans_ranked_cached`).
+    a straggler. The candidate join is therefore salted (``id % salt`` on
+    one side, the other replicated ``salt``x) — the block-join trade:
+    salt x more id-only rows shuffled buys salt x the parallelism for the
+    Σ bucket² pair emission. ``ranked`` accepts a prefit quantizer
+    (:func:`kmeans_ranked_cached`).
 
     ``probes`` > 1 assigns each vector to its ``probes`` nearest clusters
     (the near-dup analog of IVF multi-probe): a pair is found when ANY of
     its bucket assignments overlap, recovering cross-bucket near-dups at
-    ~probes² the candidate volume. Multi-assignment can surface the same
-    pair through two shared buckets, so candidates are deduplicated on
-    (a, b) — id-only rows, a uniform-key shuffle — BEFORE the vectors are
+    ~probes² the candidate volume. Candidates are deduplicated on (a, b)
+    — id-only rows, a uniform-key shuffle — BEFORE the vectors are
     joined in for scoring; the expensive per-pair fold still runs once per
     pair."""
     if ranked is None:
         ranked = kmeans_ranked(emb, id_col, vec_col, k_clusters, iters, scale)
-    if probes > 1:
-        # The candidate self-join's key (cid) has only k_clusters distinct
-        # values, so — exactly like the 1-probe path below — it is salted:
-        # parallelism k_clusters·salt instead of k_clusters, and a hot
-        # bucket's Σ bucket² id-pairs spread over `salt` tasks instead of
-        # landing on one straggler. Only cheap (id, cid) rows are
-        # replicated; vectors join in after the (a, b) distinct.
-        buckets = ranked.filter(F.col("__rn") <= probes).select("id", "cid")
-        ids_a = buckets.select(
-            F.col("id").alias("a"), "cid",
-            F.pmod(F.col("id"), F.lit(salt)).alias("__salt"),
-        )
-        ids_b = buckets.select(
-            F.col("id").alias("b"), "cid",
-            F.explode(F.expr(f"sequence(0, {salt - 1})")).alias("__salt"),
-        )
-        pairs = (
-            ids_a.join(ids_b, ["cid", "__salt"])
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-            .distinct()
-        )
-        base = _prep_normed(emb, id_col, vec_col, "id", "v", "n")
-        va = base.select(F.col("id").alias("a"), F.col("v").alias("va"),
-                         F.col("n").alias("na"))
-        vb = base.select(F.col("id").alias("b"), F.col("v").alias("vb"),
-                         F.col("n").alias("nb"))
-        return (
-            pairs.join(va, "a").join(vb, "b")
-            .withColumn(
-                "cos", F.expr(dot_sql("va", "vb")) / (F.col("na") * F.col("nb"))
-            )
-            .filter(F.col("cos") > threshold)
-            .select("a", "b", F.round("cos", round_to).alias("cos"))
-        )
-    buckets = ranked.filter(F.col("__rn") == 1).select("id", "cid")
-    base = _prep_normed(emb, id_col, vec_col, "id", "v", "n").join(buckets, "id")
-    a = base.select(
-        F.col("id").alias("a"), F.col("v").alias("va"), F.col("n").alias("na"),
-        "cid", F.pmod(F.col("id"), F.lit(salt)).alias("__salt"),
-    )
-    b = base.select(
-        F.col("id").alias("b"), F.col("v").alias("vb"), F.col("n").alias("nb"),
-        "cid", F.explode(F.expr(f"sequence(0, {salt - 1})")).alias("__salt"),
-    )
-    return (
-        a.join(b, ["cid", "__salt"])
-        .filter(F.col("a") < F.col("b"))
-        .withColumn(
-            "cos", F.expr(dot_sql("va", "vb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cos") > threshold)
-        .select("a", "b", F.round("cos", round_to).alias("cos"))
+    buckets = ranked.filter(F.col("__rn") <= probes).select("id", "cid")
+    pairs = candidate_pairs(buckets, keys=["cid"], salt=salt)
+    return cosine_verify(
+        pairs, emb, None, id_col, vec_col, threshold, round_to
     )
 
 
@@ -588,24 +518,13 @@ def neardup_incremental(
     exact cosine scoring (the only stage that touches them, and only for
     candidate ids)."""
     d_assign = assign_ranked(delta_emb, cent, id_col, vec_col, scale)
-    dbuckets = d_assign.filter(F.col("__rn") <= probes).select(
-        F.col("id").alias("a"), "cid",
-        F.explode(F.expr(f"sequence(0, {salt - 1})")).alias("__salt"),
+    pairs = candidate_pairs(
+        d_assign.filter(F.col("__rn") <= probes).select("id", "cid"),
+        corpus_ranked.filter(F.col("__rn") <= probes).select("id", "cid"),
+        keys=["cid"], salt=salt,
     )
-    cbuckets = corpus_ranked.filter(F.col("__rn") <= probes).select(
-        F.col("id").alias("b"), "cid",
-        F.pmod(F.col("id"), F.lit(salt)).alias("__salt"),
-    )
-    pairs = dbuckets.join(cbuckets, ["cid", "__salt"]).select("a", "b").distinct()
-    va = _prep_normed(delta_emb, id_col, vec_col, "a", "va", "na")
-    vb = _prep_normed(corpus_emb, id_col, vec_col, "b", "vb", "nb")
-    return (
-        pairs.join(va, "a").join(vb, "b")
-        .withColumn(
-            "cos", F.expr(dot_sql("va", "vb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cos") > threshold)
-        .select("a", "b", F.round("cos", round_to).alias("cos"))
+    return cosine_verify(
+        pairs, delta_emb, corpus_emb, id_col, vec_col, threshold, round_to
     )
 
 
@@ -620,15 +539,13 @@ def neardup_pairs_cross(
     small/bounded: it exists to MEASURE the recall of
     :func:`neardup_incremental` (independent of its candidate machinery),
     the delta-vs-corpus analog of :func:`neardup_pairs`."""
-    va = _prep_normed(left, id_col, vec_col, "a", "va", "na")
-    vb = _prep_normed(right, id_col, vec_col, "b", "vb", "nb")
-    return (
-        va.crossJoin(vb)
-        .withColumn(
-            "cos", F.expr(dot_sql("va", "vb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cos") > threshold)
-        .select("a", "b", F.round("cos", round_to).alias("cos"))
+    pairs = candidate_pairs(
+        left.select(F.col(id_col).alias("id")),
+        right.select(F.col(id_col).alias("id")),
+        keys=(),
+    )
+    return cosine_verify(
+        pairs, left, right, id_col, vec_col, threshold, round_to
     )
 
 
@@ -640,17 +557,10 @@ def neardup_pairs(
 
     Exactness baseline: crossJoin bounded by ``n``; use
     :func:`neardup_pairs_bucketed` for whole-corpus scale."""
-    sub = _prep_normed(emb, id_col, vec_col, "id", "v", "nm").filter(F.col("id") < n)
-    a = sub.select(F.col("id").alias("a"), F.col("v").alias("va"), F.col("nm").alias("na"))
-    b = sub.select(F.col("id").alias("b"), F.col("v").alias("vb"), F.col("nm").alias("nb"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a") < F.col("b"))
-        .withColumn(
-            "cos", F.expr(dot_sql("va", "vb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cos") > threshold)
-        .select("a", "b", F.round("cos", round_to).alias("cos"))
+    ids = emb.select(F.col(id_col).alias("id")).filter(F.col("id") < n)
+    return cosine_verify(
+        candidate_pairs(ids, keys=()), emb, None, id_col, vec_col,
+        threshold, round_to,
     )
 
 
@@ -1344,23 +1254,9 @@ def srp_pairs(
         srp_codes(emb, id_col, vec_col, n_planes, dim, scale),
         n_planes, band_bits,
     )
-    cand = (
-        bands.select("band", "bv", F.col("id").alias("a"))
-        .join(bands.select("band", "bv", F.col("id").alias("b")), ["band", "bv"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    va = _prep_normed(emb, id_col, vec_col, "a", "av", "an")
-    vb = _prep_normed(emb, id_col, vec_col, "b", "bv2", "bn")
-    return (
-        cand.join(va, "a")
-        .join(vb, "b")
-        .withColumn(
-            "cos", F.expr(dot_sql("av", "bv2")) / (F.col("an") * F.col("bn"))
-        )
-        .filter(F.col("cos") > tau)
-        .select("a", "b", F.round("cos", round_to).alias("cos"))
+    return cosine_verify(
+        candidate_pairs(bands, keys=["band", "bv"]), emb, None,
+        id_col, vec_col, tau, round_to,
     )
 
 
@@ -1389,27 +1285,16 @@ def srp_pairs_incremental(
     Shuffle shape: both band sides exchange id-only rows on the uniform
     (band, band-value) key; the delta side is small by definition, so
     AQE broadcasts it in practice."""
-    dbands = _srp_bands(
-        srp_codes(delta, id_col, vec_col, n_planes, dim, scale),
-        n_planes, band_bits,
+    pairs = candidate_pairs(
+        _srp_bands(
+            srp_codes(delta, id_col, vec_col, n_planes, dim, scale),
+            n_planes, band_bits,
+        ),
+        _srp_bands(corpus_codes, n_planes, band_bits),
+        keys=["band", "bv"],
     )
-    cbands = _srp_bands(corpus_codes, n_planes, band_bits)
-    cand = (
-        dbands.withColumnRenamed("id", "a")
-        .join(cbands.withColumnRenamed("id", "b"), ["band", "bv"])
-        .select("a", "b")
-        .distinct()
-    )
-    va = _prep_normed(delta, id_col, vec_col, "a", "av", "an")
-    vb = _prep_normed(corpus_vecs, id_col, vec_col, "b", "bv2", "bn")
-    return (
-        cand.join(va, "a")
-        .join(vb, "b")
-        .withColumn(
-            "cos", F.expr(dot_sql("av", "bv2")) / (F.col("an") * F.col("bn"))
-        )
-        .filter(F.col("cos") > tau)
-        .select("a", "b", F.round("cos", round_to).alias("cos"))
+    return cosine_verify(
+        pairs, delta, corpus_vecs, id_col, vec_col, tau, round_to
     )
 
 

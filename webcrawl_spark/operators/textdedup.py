@@ -295,6 +295,37 @@ def _cap_buckets(buckets: DataFrame, max_bucket_size: int | None) -> DataFrame:
     )
 
 
+def candidate_pairs(
+    rows: DataFrame, corpus: DataFrame | None = None, keys=("bucket",),
+    salt: int | None = None,
+) -> DataFrame:
+    """Distinct id-only ``(a, b)`` pairs of ``(id, key…)`` rows sharing a
+    key — the one candidate join of every near-duplicate family (MinHash
+    LSH, SimHash, SRP, k-means buckets; each supplies only its keys).
+    One input: a self-join keeping ``a < b``; with ``corpus``: the
+    delta×corpus join. No keys: every pair (the exact baselines).
+
+    ``salt`` spreads a low-cardinality key (k-means ``cid``): the larger
+    side — the self-join's ``a`` copy, or the corpus — keys on
+    ``pmod(id, salt)`` and the other side is replicated ``salt``×."""
+    keys = list(keys)
+    a = rows.select(F.col("id").alias("a"), *keys)
+    b = (rows if corpus is None else corpus).select(F.col("id").alias("b"), *keys)
+    if salt is not None:
+        spread = F.explode(F.expr(f"sequence(0, {salt - 1})")).alias("__salt")
+        if corpus is None:
+            a = a.withColumn("__salt", F.pmod("a", F.lit(salt)))
+            b = b.select("*", spread)
+        else:
+            a = a.select("*", spread)
+            b = b.withColumn("__salt", F.pmod("b", F.lit(salt)))
+        keys.append("__salt")
+    pairs = a.join(b, keys) if keys else a.crossJoin(b)
+    if corpus is None:
+        pairs = pairs.filter(F.col("a") < F.col("b"))
+    return pairs.select("a", "b").distinct()
+
+
 def lsh_candidate_pairs(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     bands: int = 4, rows_per_band: int = 2, k: int = 5,
@@ -311,18 +342,10 @@ def lsh_candidate_pairs(
     kept members still mark the group; use
     :func:`lsh_bucket_stats` to report what was dropped). ``None`` = no cap.
     """
-    buckets = _cap_buckets(
+    return candidate_pairs(_cap_buckets(
         lsh_buckets(docs, text_col, id_col, bands, rows_per_band, k, cache_key),
         max_bucket_size,
-    )
-    left = buckets.withColumnRenamed("id", "a")
-    right = buckets.withColumnRenamed("id", "b")
-    return (
-        left.join(right, "bucket")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    ))
 
 
 _INHERIT = object()   # sentinel: "delta cap = corpus cap" (None means uncapped)
@@ -368,17 +391,11 @@ def lsh_pairs_incremental(
     )
     if delta_max_bucket_size is _INHERIT:
         delta_max_bucket_size = max_bucket_size
-    dbuckets = _cap_buckets(
-        sig_buckets(dsig, bands, rows_per_band), delta_max_bucket_size
-    )
-    cbuckets = _cap_buckets(
-        sig_buckets(corpus_sigs, bands, rows_per_band), max_bucket_size
-    )
-    return (
-        dbuckets.withColumnRenamed("id", "a")
-        .join(cbuckets.withColumnRenamed("id", "b"), "bucket")
-        .select("a", "b")
-        .distinct()
+    return candidate_pairs(
+        _cap_buckets(sig_buckets(dsig, bands, rows_per_band),
+                     delta_max_bucket_size),
+        _cap_buckets(sig_buckets(corpus_sigs, bands, rows_per_band),
+                     max_bucket_size),
     )
 
 
@@ -660,15 +677,9 @@ def simhash_pairs_incremental(
     materializes it once (:func:`simhash_cached`) instead of running the
     token pass twice."""
     dsig = simhash_cached(delta_docs, text_col, id_col, bits, cache_key)
-    dbuckets = _cap_buckets(simhash_bands(dsig, bands, bits), max_bucket_size)
-    cbuckets = _cap_buckets(
-        simhash_bands(corpus_sigs, bands, bits), max_bucket_size
-    )
-    pairs = (
-        dbuckets.withColumnRenamed("id", "a")
-        .join(cbuckets.withColumnRenamed("id", "b"), "bucket")
-        .select("a", "b")
-        .distinct()
+    pairs = candidate_pairs(
+        _cap_buckets(simhash_bands(dsig, bands, bits), max_bucket_size),
+        _cap_buckets(simhash_bands(corpus_sigs, bands, bits), max_bucket_size),
     )
     ha = dsig.select(F.col("id").alias("a"), F.col("simhash").alias("ha"))
     hb = corpus_sigs.select(
@@ -698,17 +709,11 @@ def ngram_jaccard_pairs(
         F.expr(shingles_sql(text_col, k)).alias("sh"),
     )
     if pairs is None:
-        a = sh.select(F.col("id").alias("a"), F.col("sh").alias("sha"))
-        b = sh.select(
-            (F.col("id") - 1).alias("a"), F.col("id").alias("b"),
-            F.col("sh").alias("shb"),
-        )
-        joined = a.join(b, "a")
-    else:
-        joined = (
-            pairs.join(sh.select(F.col("id").alias("a"), F.col("sh").alias("sha")), "a")
-            .join(sh.select(F.col("id").alias("b"), F.col("sh").alias("shb")), "b")
-        )
+        pairs = sh.select(F.col("id").alias("a"), (F.col("id") + 1).alias("b"))
+    joined = (
+        pairs.join(sh.select(F.col("id").alias("a"), F.col("sh").alias("sha")), "a")
+        .join(sh.select(F.col("id").alias("b"), F.col("sh").alias("shb")), "b")
+    )
     return (
         joined.select(
             "a", "b",
@@ -762,16 +767,7 @@ def paragraph_dedup(
     in corpus size, never quadratic.
     """
     paras = _paragraphs(docs, text_col, id_col)
-    dup_first = (
-        paras.groupBy("phash")
-        .agg(
-            F.min(F.struct("id", "pos")).alias("first_occ"),
-            F.count(F.lit(1)).alias("n_occ"),
-        )
-        .where(F.col("n_occ") > 1)
-        .select("phash", "first_occ")
-    )
-    marked = paras.join(dup_first, "phash", "left").withColumn(
+    marked = paras.join(_dup_first(paras), "phash", "left").withColumn(
         "keep",
         F.col("first_occ").isNull()
         | (F.struct("id", "pos") == F.col("first_occ")),
@@ -789,6 +785,20 @@ def _paragraphs(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
         .select("id", "pos", F.trim("rawp").alias("para"))
         .where(F.col("para") != "")
         .withColumn("phash", F.md5("para"))
+    )
+
+
+def _dup_first(paras: DataFrame) -> DataFrame:
+    """(phash, first_occ): the surviving ``(id, pos)`` of every paragraph
+    hash occurring more than once."""
+    return (
+        paras.groupBy("phash")
+        .agg(
+            F.min(F.struct("id", "pos")).alias("first_occ"),
+            F.count(F.lit(1)).alias("n_occ"),
+        )
+        .where(F.col("n_occ") > 1)
+        .select("phash", "first_occ")
     )
 
 
@@ -857,18 +867,9 @@ def paragraph_dedup_incremental(
     in_corpus = (
         corpus_phashes.select("phash").distinct().withColumn("__hit", F.lit(True))
     )
-    dup_first = (
-        paras.groupBy("phash")
-        .agg(
-            F.min(F.struct("id", "pos")).alias("first_occ"),
-            F.count(F.lit(1)).alias("n_occ"),
-        )
-        .where(F.col("n_occ") > 1)
-        .select("phash", "first_occ")
-    )
     marked = (
         paras.join(in_corpus, "phash", "left")
-        .join(dup_first, "phash", "left")
+        .join(_dup_first(paras), "phash", "left")
         .withColumn(
             "keep",
             F.col("__hit").isNull()
@@ -1157,33 +1158,26 @@ def feature_overlap_pairs(
     """
     d = (
         ef.select(
-            F.col(entity_col).alias("e"), F.col(feature_col).alias("f")
+            F.col(entity_col).alias("id"), F.col(feature_col).alias("bucket")
         )
-        .filter(F.col("f").isNotNull())
+        .filter(F.col("bucket").isNotNull())
         .distinct()
     )
-    sizes = d.groupBy("e").agg(F.count(F.lit(1)).alias("sz"))
-    capped = d
-    if cap is not None:
-        w = Window.partitionBy("f").orderBy("e")
-        capped = (
-            d.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= cap)
-            .drop("__rn")
-        )
+    sizes = d.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
+    capped = _cap_buckets(d, cap)
     pairs = (
-        capped.alias("x")
-        .join(capped.alias("y"), "f")
-        .filter(F.col("x.e") < F.col("y.e"))
-        .groupBy(F.col("x.e").alias("a"), F.col("y.e").alias("b"))
+        capped.withColumnRenamed("id", "a")
+        .join(capped.withColumnRenamed("id", "b"), "bucket")
+        .filter(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("common"))
         .filter(F.col("common") >= min_common)
     )
     return (
-        pairs.join(sizes.withColumnRenamed("e", "a"), "a")
+        pairs.join(sizes.withColumnRenamed("id", "a"), "a")
         .withColumnRenamed("sz", "size_a")
         .join(
-            sizes.withColumnRenamed("e", "b").withColumnRenamed("sz", "size_b"),
+            sizes.withColumnRenamed("id", "b").withColumnRenamed("sz", "size_b"),
             "b",
         )
         .select(

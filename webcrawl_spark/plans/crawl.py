@@ -309,18 +309,6 @@ class SparkCrawler:
         return d
 
     def _run_one(self, m: Manifest, carry):
-        import os as _os
-        import time as _time
-
-        _dbg = _os.environ.get("WC_ROUND_TIMING")
-        _t = [_time.time()]
-
-        def _mk(label):
-            if _dbg:
-                now = _time.time()
-                print(f"    [r{m.next_round}] {label}: {now - _t[0]:.2f}s", flush=True)
-                _t[0] = now
-
         k = m.next_round
         st = self.state
         self.ctx.bloom_dir = self._bloom_dir
@@ -380,13 +368,11 @@ class SparkCrawler:
         try:
             if bloom_cb is not None:
                 self._bloom_dir = nd
-            _mk("run_round_total")
             # the PREVIOUS round's background commits have now fully
             # overlapped this round's compute — settle them and make that
             # round visible
             if carry is not None:
                 self._drain(carry)
-                _mk("prev_round_commit")
             nm = Manifest(
                 next_round=k + 1,
                 next_seq=stats.next_seq,

@@ -47,8 +47,6 @@ Physical-plan choices (the 100-TB story):
 
 from __future__ import annotations
 
-import os
-import time
 from dataclasses import dataclass, field
 
 from pyspark import InheritableThread
@@ -230,16 +228,6 @@ def run_round(
     # seen feeds both the dedup anti-join and the derived query-string
     # counts — persist so the (large, growing) union scan happens once
     seen = seen.persist()
-    _debug = os.environ.get("WC_ROUND_TIMING")
-    _t0 = time.time()
-
-    def _mark(label):
-        nonlocal _t0
-        if _debug:
-            now = time.time()
-            print(f"    [r{rnd}] {label}: {now - _t0:.2f}s", flush=True)
-            _t0 = now
-
     # ---------------- 1. SELECT (politeness + budgets) ----------------
     sel = select_polite(
         frontier, _budget_col(ctx), cfg.salt_buckets, cfg.max_connections
@@ -310,7 +298,6 @@ def run_round(
         .mapInPandas(make_decode_stage(cfg, ctx.base_uris_bc), DECODE_SCHEMA)
     )
     dec = cut(dec, cfg.reliable_checkpoints)
-    _mark("fetch_decode_ckpt")
 
     # routing (fatal taxonomy; IsFatalError Crawler.cs:2121-2164 + redirect
     # outcomes Crawler.cs:635-647, 1585-1597):
@@ -447,7 +434,6 @@ def run_round(
     cand = cut(cand, cfg.reliable_checkpoints)
     cand_count = cand.count() if cfg.reliable_checkpoints else obs_c.get["n"]
     small_acc = cand_count <= cfg.small_round_threshold
-    _mark("parse_ckpt")
 
     # the fetch_log write has been overlapping the parse stage; its
     # Observation (needed for the carried anti-join's broadcast gate and the
@@ -468,7 +454,6 @@ def run_round(
         (rnd, "fetch", "errors", n_selected - n_good - n_retry),
     ]
     n_carried = frontier_rows - n_selected + n_retry
-    _mark("fetch_log_join")
 
     # 5a. min-depth merge into carried entries (still-queued rediscoveries,
     #     Crawler.cs:2303-2307). Carried keys ⊆ seen, so joining all
@@ -639,7 +624,6 @@ def run_round(
     if bloom_flagged is not None:
         bloom_flagged.unpersist()
     seen.unpersist()
-    _mark("acc_ckpt")
 
     seen_delta = acc.select(
         "host",
@@ -673,7 +657,6 @@ def run_round(
     # across rounds (every input is itself a checkpoint from this round)
     carried_job.wait()
     next_frontier = carried_slot["df"].unionByName(new_entries)
-    _mark("carried_join")
 
     # the remaining commits (seen delta, frontier snapshot, Bloom sidecar)
     # all read only checkpointed inputs and write independent directories —

@@ -147,7 +147,8 @@ edges AS (
 
 
 def trace_sql(n_docs: int, n_seeds: int = 4, budget: int = 8,
-              rounds: int = 12, depth_limit: int = 50) -> str:
+              rounds: int = 12, depth_limit: int = 50,
+              n_hosts: int = N_HOSTS) -> str:
     """FULL crawl-trace oracle: (round, fetch_seq, url, depth, link_type).
 
     The synthetic-web crawl reduces to a politeness-scheduled BFS with a
@@ -163,7 +164,7 @@ def trace_sql(n_docs: int, n_seeds: int = 4, budget: int = 8,
     are MATERIALIZED because each round references the previous twice,
     which would otherwise inline exponentially.
     """
-    host = host_id_expr("id")
+    host = host_id_expr("id", n_hosts)
 
     def m(name, body):
         return f"{name} AS MATERIALIZED ({body})"
@@ -228,7 +229,7 @@ FROM trace ORDER BY fetch_seq
 """
 
 
-def reach_seen_sql(n_docs: int, n_seeds: int = 4) -> str:
+def reach_seen_sql(n_docs: int, n_seeds: int = 4, n_hosts: int = N_HOSTS) -> str:
     """Seen-set membership oracle: BFS reachability from the seeds.
 
     Returns (host, url_key) for every reachable doc — must equal the
@@ -241,7 +242,7 @@ reach(id) AS (
   UNION
   SELECT e.dst FROM reach r JOIN edges e ON e.src = r.id
 )
-SELECT ('site' || CAST({host_id_expr('id')} AS VARCHAR) || '.test') AS host,
+SELECT ('site' || CAST({host_id_expr('id', n_hosts)} AS VARCHAR) || '.test') AS host,
        ('/doc' || CAST(id AS VARCHAR) || '.html') AS url_key
 FROM reach
 ORDER BY host, url_key
